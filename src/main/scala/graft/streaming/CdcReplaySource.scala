@@ -1,5 +1,9 @@
 package graft.streaming
 
+import java.nio.ByteBuffer
+import java.nio.channels.{Channels, FileChannel}
+import java.nio.charset.StandardCharsets.US_ASCII
+import java.nio.file.Paths
 import java.util
 import scala.jdk.CollectionConverters._
 
@@ -97,6 +101,14 @@ object CdcReplaySource {
   private[streaming] def isComplete(line: String): Boolean =
     line.startsWith("{\"lsn\":") && line.endsWith("]}")
 
+  private def midFileTear(fileName: String) = new IllegalStateException(
+    s"$fileName has a corrupt frame-log line before end of file; " +
+      "only a torn final line (crash artifact) is tolerated")
+
+  private[streaming] def unsorted(fileName: String, lsn: Long, prev: Long) =
+    new IllegalStateException(s"$fileName is not LSN-sorted ($lsn after " +
+      s"$prev); cdc-replay shards must be written in LSN order")
+
   /** Torn-tail tolerance: a torn LAST line is a crash artifact — by
     * the durable-then-ack contract (the log flush precedes the
     * covering ack) it is never acked, so dropping it just replays the
@@ -109,9 +121,7 @@ object CdcReplaySource {
       private var pending: String = if (lines.hasNext) lines.next() else null
       def hasNext: Boolean = pending != null && {
         if (isComplete(pending)) true
-        else if (lines.hasNext) throw new IllegalStateException(
-          s"$fileName has a corrupt frame-log line before end of file; " +
-            "only a torn final line (crash artifact) is tolerated")
+        else if (lines.hasNext) throw midFileTear(fileName)
         else { pending = null; false }
       }
       def next(): String = {
@@ -125,46 +135,94 @@ object CdcReplaySource {
     * Enforces the per-shard LSN-sort format invariant (this reads
     * every line anyway, so the check is free here). */
   def lsnIndex(path: String): Seq[Long] =
-    listLogFiles(path).flatMap(lsnIndexOfFile(_).map(_._1)).sorted
+    listLogFiles(path).flatMap(indexShard(_, 0L, Long.MinValue)._1.map(_._1)).sorted
 
-  /** One shard file's (lsn, byte offset of its line), format-
-    * invariant-checked. Byte offsets let a micro-batch reader SEEK to
-    * its slice instead of rescanning the head of a growing shard on
-    * every trigger (the log format is ASCII by construction — hex,
-    * digits, fixed punctuation — so bytes = chars + the newline). */
-  private[streaming] def lsnIndexOfFile(f: String): Seq[(Long, Long)] =
-    lsnIndexOfFileFrom(f, 0L)
+  private val LsnKey = "{\"lsn\":".getBytes(US_ASCII)
 
-  /** [[lsnIndexOfFile]] resumed at `startByte` (must be a line
-    * boundary — the `parsedBytes` high-water mark of a previous
-    * parse): the incremental half of the driver index, so a GROWING
-    * shard costs O(appended bytes) per trigger, not O(file). Entries'
-    * offsets are absolute. */
-  private[streaming] def lsnIndexOfFileFrom(
-      f: String, startByte: Long): Seq[(Long, Long)] = {
-    val stream = new java.io.FileInputStream(f)
+  private val LsnHeadBytes = 32 // the key, a Long's 19 digits, and spare
+
+  private def hasKey(head: Array[Byte], headLen: Int): Boolean =
+    headLen >= LsnKey.length &&
+      java.util.Arrays.equals(head, 0, LsnKey.length, LsnKey, 0, LsnKey.length)
+
+  private def headLsn(head: Array[Byte], headLen: Int): Long =
+    parseLsn(new String(head, 0, headLen, US_ASCII))
+
+  /** The LSN of the line at byte `off`, from a bounded read of its
+    * head — `None` if no line of the frame-log shape starts there. */
+  private[streaming] def lsnAt(f: String, off: Long): Option[Long] = {
+    val ch = FileChannel.open(Paths.get(f))
     try {
-      var toSkip = startByte
-      while (toSkip > 0) {
-        val skipped = stream.skip(toSkip)
-        if (skipped <= 0) toSkip = 0 else toSkip -= skipped
+      val buf = ByteBuffer.allocate(LsnHeadBytes)
+      while (buf.hasRemaining && ch.read(buf, off + buf.position()) > 0) ()
+      Some(buf.position()).filter(hasKey(buf.array(), _)).map(headLsn(buf.array(), _))
+    } finally ch.close()
+  }
+
+  /** THE driver-index scan of one shard from byte `from` (0 or a
+    * previous scan's mark): the (lsn, byte offset) of every complete
+    * line and the high-water mark past the last one, from one pass of
+    * 64 KB reads — a growing shard costs one pass over its appended
+    * bytes. Lines are judged by [[isComplete]]'s rule on their head
+    * and last two bytes, with [[completeLines]]' torn-line contract;
+    * LSNs must not fall, nor fall below `after` (the last LSN before
+    * `from`). An unterminated complete final line is delivered with
+    * the mark at EOF; its newline is skipped when it lands. */
+  private[streaming] def indexShard(f: String, from: Long,
+      after: Long): (Vector[(Long, Long)], Long) = {
+    val ch = FileChannel.open(Paths.get(f))
+    try {
+      val block = ByteBuffer.allocate(1 << 16)
+      val bytes = block.array()
+      val head = new Array[Byte](LsnHeadBytes)
+      val out = Vector.newBuilder[(Long, Long)]
+      // read from one byte before the mark: a mark that does not follow
+      // a newline is the EOF clamp of an unterminated complete line
+      var pos = math.max(from - 1, 0L) // file offset of bytes(0)
+      var n = ch.read(block, pos)
+      var i = (from - pos).toInt
+      if (i == 1 && n >= 2 && bytes(0) != '\n' && bytes(1) == '\n') i = 2
+      var lineStart = pos + i
+      var mark = lineStart // past the last complete line
+      var headLen = 0
+      var b2, b1 = 0 // the current line's last two bytes
+      var torn = false
+      var prevLsn = after
+      def endLine(end: Long): Unit = {
+        if (torn) throw midFileTear(f)
+        // isComplete's rule on the line's head and last two bytes
+        if (!(hasKey(head, headLen) && b2 == ']' && b1 == '}')) torn = true
+        else {
+          val lsn = headLsn(head, headLen)
+          if (lsn < prevLsn) throw unsorted(f, lsn, prevLsn)
+          prevLsn = lsn
+          out += ((lsn, lineStart))
+          mark = end
+        }
+        lineStart = end; headLen = 0; b2 = 0; b1 = 0
       }
-      val src = scala.io.Source.fromInputStream(stream)
-      var at = startByte
-      val entries = completeLines(f, src.getLines())
-        .map { l =>
-          val e = (parseLsn(l), at)
-          at += l.length + 1L
-          e
-        }.toList
-      entries.iterator.sliding(2).foreach {
-        case Seq((a, _), (b, _)) if b < a => throw new IllegalStateException(
-          s"$f is not LSN-sorted ($b after $a); " +
-            "cdc-replay shards must be written in LSN order")
-        case _ => ()
+      while (n > 0) {
+        while (i < n) {
+          var j = i
+          while (j < n && bytes(j) != '\n') j += 1
+          if (headLen < LsnHeadBytes) {
+            val k = math.min(j - i, LsnHeadBytes - headLen)
+            System.arraycopy(bytes, i, head, headLen, k)
+            headLen += k
+          }
+          if (j - i >= 2) { b2 = bytes(j - 2); b1 = bytes(j - 1) }
+          else if (j - i == 1) { b2 = b1; b1 = bytes(i) }
+          if (j < n) endLine(pos + j + 1)
+          i = j + 1
+        }
+        pos += n
+        block.clear()
+        n = ch.read(block, pos)
+        i = 0
       }
-      entries
-    } finally stream.close()
+      if (pos > lineStart) endLine(pos) // unterminated final line
+      (out.result(), mark)
+    } finally ch.close()
   }
 
   private[streaming] def parseLsn(line: String): Long = {
@@ -245,14 +303,15 @@ object CdcReplaySource {
     }
   }
 
-  def lastAckedLsn(path: String): Option[Long] = {
-    val f = ackSidecar(path)
+  def lastAckedLsn(path: String): Option[Long] = readPosition(ackSidecar(path))
+
+  /** A position sidecar's LSN; `None` if the file does not exist. */
+  private def readPosition(f: java.io.File): Option[Long] =
     if (!f.exists) None
     else {
       val src = scala.io.Source.fromFile(f)
       try Some(src.mkString.trim.toLong) finally src.close()
     }
-  }
 
   /** Per-SLOT confirmed position — the socket CLIENT's resume record,
     * mirroring PostgreSQL's own model where every replication slot
@@ -311,14 +370,8 @@ object CdcReplaySource {
     }
   }
 
-  private def readSlotAcked(path: String, slot: String): Option[Long] = {
-    val f = slotAckSidecar(path, slot)
-    if (!f.exists) None
-    else {
-      val src = scala.io.Source.fromFile(f)
-      try Some(src.mkString.trim.toLong) finally src.close()
-    }
-  }
+  private def readSlotAcked(path: String, slot: String): Option[Long] =
+    readPosition(slotAckSidecar(path, slot))
 
   /** The slot's confirmed position. Migration fallback: a log dir
     * with NO per-slot sidecars at all is pre-upgrade state — the
@@ -578,11 +631,8 @@ object CdcReplaySource {
     val slotFloors: Seq[Long] = {
       val files = Option(new java.io.File(path).listFiles())
         .getOrElse(Array.empty)
-      files.toSeq.collect {
-        case f if f.getName.startsWith("_acked_lsn@") =>
-          val src = scala.io.Source.fromFile(f)
-          try src.mkString.trim.toLong finally src.close()
-      } ++ lastAckedLsn(path).toSeq
+      files.toSeq.filter(_.getName.startsWith("_acked_lsn@"))
+        .flatMap(readPosition) ++ lastAckedLsn(path).toSeq
     }
     listLogFiles(path).map { p =>
       val nm = new java.io.File(p).getName
@@ -832,9 +882,10 @@ class CdcReplayStream(path: String, initial: ShardOffsets,
   /** path → (stat key, parsedBytes high-water mark, entries).
     * `parsedBytes` is the byte offset just past the last COMPLETE
     * line parsed — a torn tail stays unparsed and is retried from
-    * the same offset next poll. */
+    * the same offset next poll. Entries are LSN-sorted (the format
+    * invariant the scan enforces), so lookups binary-search them. */
   private val fileCache = scala.collection.mutable
-    .Map.empty[String, ((Long, Long), Long, Seq[(Long, Long)])]
+    .Map.empty[String, ((Long, Long), Long, Vector[(Long, Long)])]
 
   /** Total bytes this stream has parsed into its driver index —
     * observability hook for the incremental-append contract (an
@@ -847,93 +898,48 @@ class CdcReplayStream(path: String, initial: ShardOffsets,
     * writer) re-parses only the tail past the high-water mark — the
     * live-tail path where a 100 GB shard must not be re-read per
     * trigger. Anything else that changed (shrunk, or same-length
-    * different mtime: a rewrite) re-parses from byte 0. */
-  private def refreshIndex(): Map[String, (String, Seq[(Long, Long)])] =
+    * different mtime: a rewrite) re-parses from byte 0. Cost per
+    * poll: one [[CdcReplaySource.indexShard]] pass over the appended
+    * bytes, plus a bounded read of the last entry's LSN head. */
+  private def refreshIndex(): Map[String, (String, Vector[(Long, Long)])] =
     synchronized {
       CdcReplaySource.listLogFiles(path).map { f =>
         val file = new java.io.File(f)
         val key = (file.length(), file.lastModified())
         val lsns = fileCache.get(f) match {
           case Some((cached, _, ls)) if cached == key => ls
-          case Some((cached, parsed, ls))
-              if cached._1 < file.length() && ls.nonEmpty &&
-                lastEntryIntact(f, ls.last) =>
-            val tail = CdcReplaySource.lsnIndexOfFileFrom(f, parsed)
-            // the sort invariant must hold across the append boundary
-            tail.headOption.foreach { case (lsn, _) =>
-              if (lsn < ls.last._1) throw new IllegalStateException(
-                s"$f is not LSN-sorted ($lsn appended after " +
-                  s"${ls.last._1}); cdc-replay shards must be " +
-                  "written in LSN order")
-            }
+          case prev =>
+            val (parsed, ls) = prev.collect {
+              case (cached, parsed, ls) if cached._1 < file.length() &&
+                  ls.nonEmpty && lastEntryIntact(f, ls.last) => (parsed, ls)
+            }.getOrElse((0L, Vector.empty[(Long, Long)]))
+            // the sort invariant is checked across the append boundary
+            val (tail, parsedTo) = CdcReplaySource.indexShard(f, parsed,
+              ls.lastOption.fold(Long.MinValue)(_._1))
             val all = ls ++ tail
-            // clamp: a final line without a trailing newline measures
-            // one byte long (the at += len + 1 convention); the mark
-            // must never pass EOF or a later append would be skipped
-            // into mid-line
-            val parsedTo = tail.lastOption
-              .map { case (_, off) =>
-                math.min(off + lineLen(f, off), file.length()) }
-              .getOrElse(parsed)
             indexBytesParsed += parsedTo - parsed
             fileCache(f) = (key, parsedTo, all)
             all
-          case _ =>
-            val ls = CdcReplaySource.lsnIndexOfFile(f)
-            val parsedTo = ls.lastOption
-              .map { case (_, off) =>
-                math.min(off + lineLen(f, off), file.length()) }
-              .getOrElse(0L)
-            indexBytesParsed += parsedTo
-            fileCache(f) = (key, parsedTo, ls)
-            ls
         }
         file.getName -> (f, lsns)
       }.toMap
     }
 
-  /** Length (incl. newline) of the complete line starting at `off` —
-    * one small seek+scan to close the high-water mark over the final
-    * entry (the earlier entries' extents are implied by their
-    * successors). */
   /** Append-path guard: length growth alone does not prove the
     * prefix is untouched — a line-boundary-aligned truncate-and-
     * rewrite that lands LONGER would otherwise keep stale
-    * (lsn, offset) entries pointing into rewritten bytes. Re-parse
-    * the last cached entry's line and compare its LSN; a mismatch
-    * rejects the incremental path and forces a full re-parse. One
-    * seek + one line read — O(1) per poll. */
+    * (lsn, offset) entries pointing into rewritten bytes. Re-read the
+    * last cached entry's LSN head (one bounded read, whatever the
+    * line's length); a mismatch forces a full re-parse. */
   private def lastEntryIntact(f: String, last: (Long, Long)): Boolean =
-    try {
-      val in = new java.io.FileInputStream(f)
-      try {
-        var toSkip = last._2
-        while (toSkip > 0) {
-          val skipped = in.skip(toSkip)
-          if (skipped <= 0) toSkip = 0 else toSkip -= skipped
-        }
-        val sb = new java.lang.StringBuilder
-        var c = in.read()
-        while (c >= 0 && c != '\n') { sb.append(c.toChar); c = in.read() }
-        val line = sb.toString
-        line.contains("\"lsn\":") && CdcReplaySource.parseLsn(line) == last._1
-      } finally in.close()
-    } catch { case _: Exception => false }
+    try CdcReplaySource.lsnAt(f, last._2).contains(last._1)
+    catch { case _: Exception => false }
 
-  private def lineLen(f: String, off: Long): Long = {
-    val in = new java.io.FileInputStream(f)
-    try {
-      var toSkip = off
-      while (toSkip > 0) {
-        val skipped = in.skip(toSkip)
-        if (skipped <= 0) toSkip = 0 else toSkip -= skipped
-      }
-      var n = 1L
-      var c = in.read()
-      while (c >= 0 && c != '\n') { n += 1; c = in.read() }
-      n
-    } finally in.close()
-  }
+  /** Index of the first entry above `lsn` (`ls.size` if none) by
+    * binary search: entries ascend in (lsn, offset), and no line
+    * starts at byte Long.MaxValue. */
+  private def firstAbove(ls: Vector[(Long, Long)], lsn: Long): Int =
+    ls.search((lsn, Long.MaxValue)).insertionPoint
 
   // Trigger.AvailableNow bound: per-shard tails fixed at query start
   private var availableNowEnd: Option[Map[String, Long]] = None
@@ -961,7 +967,8 @@ class CdcReplayStream(path: String, initial: ShardOffsets,
       case (nm, (_, ls)) =>
         val cap = availableNowEnd
           .map(_.getOrElse(nm, Long.MinValue)).getOrElse(Long.MaxValue)
-        ls.collect { case (l, _) if l > so.of(nm) && l <= cap => (l, nm) }
+        ls.slice(firstAbove(ls, so.of(nm)), firstAbove(ls, cap))
+          .map { case (l, _) => (l, nm) }
     }.sorted
     val taken = limit match {
       case r: ReadMaxRows =>
@@ -996,8 +1003,9 @@ class CdcReplayStream(path: String, initial: ShardOffsets,
           // seek straight to the first line of the slice — a growing
           // shard must not be rescanned from byte 0 on every trigger
           val lo = s.of(nm)
-          val startByte = entries.find(_._1 > lo).map(_._2).getOrElse(
-            new java.io.File(file).length())
+          val i = firstAbove(entries, lo)
+          val startByte =
+            if (i < entries.size) entries(i)._2 else new java.io.File(file).length()
           CdcReplayPartition(file, lo, hi, startByte): InputPartition
         }
       }.toArray
@@ -1041,20 +1049,13 @@ class CdcReplayReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[CdcReplayPartition]
     new PartitionReader[InternalRow] {
-      private val stream = new java.io.FileInputStream(p.file)
-      private val source = {
-        var toSkip = p.startByte
-        while (toSkip > 0) { // skip() may stop short; loop to the mark
-          val skipped = stream.skip(toSkip)
-          if (skipped <= 0) toSkip = 0 else toSkip -= skipped
-        }
-        scala.io.Source.fromInputStream(stream)
-      }
+      private val source = scala.io.Source.fromInputStream(
+        Channels.newInputStream(FileChannel.open(Paths.get(p.file)).position(p.startByte)))
       // log files are LSN-sorted per shard — a FORMAT INVARIANT that
       // both the streaming offsets and the pushed-down batch bounds
       // rely on. Monotonicity is checked on every line this reader
-      // consumes (and over whole files in lsnIndex, which the stream
-      // path always builds), so an out-of-order producer fails loudly
+      // consumes (and over whole files in indexShard, which the stream
+      // path always runs), so an out-of-order producer fails loudly
       // instead of silently losing rows. The sorted tail past
       // endInclusive terminates the scan early; the LSN is parsed
       // once per line.
@@ -1063,9 +1064,7 @@ class CdcReplayReaderFactory extends PartitionReaderFactory {
         .completeLines(p.file, source.getLines())
         .map { l =>
           val lsn = CdcReplaySource.parseLsn(l)
-          if (lsn < lastSeen) throw new IllegalStateException(
-            s"${p.file} is not LSN-sorted ($lsn after $lastSeen); " +
-              "cdc-replay shards must be written in LSN order")
+          if (lsn < lastSeen) throw CdcReplaySource.unsorted(p.file, lsn, lastSeen)
           lastSeen = lsn
           (lsn, l)
         }
